@@ -190,6 +190,41 @@ class TestTrainVocabCLI:
         )
         assert got == want
 
+    # 'low' is the only repeated type; the three singletons share the
+    # pair (e, r), which wins the first merge only without a floor
+    FLOOR_TEXTS = ["low low lower newer wider"]
+
+    def test_batched_honours_min_count(self, spark, tmp_path):
+        import json as _json
+
+        from vcf_pg_loader_spark.cli import main
+
+        corpus = str(tmp_path / "corpus")
+        spark.createDataFrame(
+            list(enumerate(self.FLOOR_TEXTS)), "doc_id bigint, text string"
+        ).write.parquet(corpus)
+        out = str(tmp_path / "merges.json")
+        assert main(
+            ["train-vocab", "--corpus", corpus, "--out", out,
+             "--strategy", "batched", "--min-count", "2", "--n-merges", "6"]
+        ) == 0
+        got = [tuple(m) for m in _json.load(open(out))["merges"]]
+        assert got == _ref_learn(["low low"], 6)
+        assert got != _ref_learn(self.FLOOR_TEXTS, 6)
+
+    def test_sequential_rejects_min_count(self, tmp_path, capsys):
+        import os
+
+        from vcf_pg_loader_spark.cli import main
+
+        out = str(tmp_path / "merges.json")
+        assert main(
+            ["train-vocab", "--corpus", str(tmp_path / "corpus"),
+             "--out", out, "--strategy", "sequential", "--min-count", "2"]
+        ) == 2
+        assert "--min-count" in capsys.readouterr().err
+        assert not os.path.exists(out)
+
 
 class TestBPELearnBatched:
     """Round-12: batched rounds must produce the IDENTICAL merge

@@ -34,6 +34,127 @@ def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
+# -- plain-Python walk of the sink's admission rules -------------------------
+def _ref_shingles(text: str, n: int) -> frozenset:
+    toks = text.split(" ")
+    if len(toks) < n:
+        return frozenset()
+    return frozenset(" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1))
+
+
+def _ref_bands(sh: frozenset, k: int, nb: int) -> set:
+    """(band_id, band_key) rows of one shingle set, as lsh_band_table
+    defines them: md5-derived 60-bit base hash per shingle, K arithmetic
+    permutations, md5 of each band's "_"-joined values."""
+    import hashlib
+
+    from vcf_pg_loader_spark.operators import dedup as D
+
+    if not sh:
+        return set()
+    base = [int(hashlib.md5(("mh:" + x).encode()).hexdigest()[:15], 16) for x in sh]
+    mask = (1 << 30) - 1
+    mh = [
+        min((a * (h >> 30) + b * (h & mask) + c) % D._MH_P for h in base)
+        for a, b, c in D._MH_PARAMS[:k]
+    ]
+    r = k // nb
+    return {
+        (i, hashlib.md5("_".join(map(str, mh[i * r : (i + 1) * r])).encode()).hexdigest())
+        for i in range(nb)
+    }
+
+
+def _ref_fp(text: str) -> str:
+    import hashlib
+    import re
+
+    return hashlib.md5(re.sub(" +", " ", text.strip(" ")).encode()).hexdigest()
+
+
+def _ref_near(a: frozenset, b: frozenset, t: float) -> bool:
+    inter = len(a & b)
+    return inter > 0 and round(inter / (len(a) + len(b) - inter), 6) >= t
+
+
+def _ref_walk(sink, batches) -> tuple[set, dict]:
+    """(admitted ids, {doc_id: band rows}) after applying `batches` in
+    order: exact gate (min id per fingerprint, minus admitted
+    fingerprints), then the near-dup gate against admitted docs (band
+    collision + exact Jaccard), then the in-batch gate over the docs still
+    alive (band collision + exact Jaccard + components, min id kept)."""
+    n, k, nb, t = sink.ngram, sink.k, sink.bands, sink.threshold
+    sh, bands, fps = {}, {}, set()
+    for batch in batches:
+        first: dict = {}
+        for d, x in sorted(batch):
+            first.setdefault(_ref_fp(x), d)
+        texts = dict(batch)
+        cand = sorted(d for f, d in first.items() if f not in fps)
+        new_sh = {d: _ref_shingles(texts[d], n) for d in cand}
+        new_bd = {d: _ref_bands(new_sh[d], k, nb) for d in cand}
+        alive = [
+            d
+            for d in cand
+            if not any(
+                new_bd[d] & bands[o] and _ref_near(new_sh[d], sh[o], t)
+                for o in bands
+            )
+        ]
+        root = {d: d for d in alive}
+
+        def find(x):
+            while root[x] != x:
+                x = root[x]
+            return x
+
+        for i, a in enumerate(alive):
+            for b in alive[i + 1 :]:
+                if new_bd[a] & new_bd[b] and _ref_near(new_sh[a], new_sh[b], t):
+                    ra, rb = find(a), find(b)
+                    root[max(ra, rb)] = min(ra, rb)
+        for d in alive:
+            if find(d) == d:
+                sh[d], bands[d] = new_sh[d], new_bd[d]
+                fps.add(_ref_fp(texts[d]))
+    return set(bands), bands
+
+
+def _seeded_batches(seed: int) -> list[list[tuple[int, str]]]:
+    """Two batches of 40-token documents with planted duplicates: exact
+    copies (re-spaced) and one-word edits of earlier documents, within a
+    batch and across the two."""
+    import random
+
+    rng = random.Random(seed)
+    vocab = [f"v{i:03d}" for i in range(300)]
+
+    def doc():
+        return [rng.choice(vocab) for _ in range(40)]
+
+    def edit(toks):
+        toks = list(toks)
+        toks[rng.randrange(len(toks))] = rng.choice(vocab)
+        return toks
+
+    def respace(toks):
+        return "  " + "  ".join(toks) + " "
+
+    b0 = [doc() for _ in range(16)]
+    b0_rows = [(i, " ".join(x)) for i, x in enumerate(b0)]
+    b0_rows += [(100, respace(b0[0])), (101, " ".join(edit(b0[1])))]
+    b0_rows += [(102, " ".join(edit(b0[2]))), (103, respace(b0[3]))]
+    b1 = [doc() for _ in range(12)]
+    b1_rows = [(200 + i, " ".join(x)) for i, x in enumerate(b1)]
+    # across batches: copies and edits of batch-0 docs
+    b1_rows += [(300 + i, respace(b0[4 + i])) for i in range(3)]
+    b1_rows += [(310 + i, " ".join(edit(b0[7 + i]))) for i in range(4)]
+    # within batch 1, including a lower id than the original
+    b1_rows += [(199, " ".join(edit(b1[0]))), (320, respace(b1[1]))]
+    b1_rows += [(321, " ".join(edit(b1[2]))), (322, " ".join(edit(edit(b1[3]))))]
+    return [b0_rows, b1_rows]
+
+
 class TestNearDupIngest:
     def test_gates_and_first_arrival_wins(self, spark, tmp_path):
         sink = NearDupIngestSink(str(tmp_path / "corpus"))
@@ -88,6 +209,81 @@ class TestNearDupIngest:
             r.doc_id for r in sink._table(spark, "bands").collect()
         }
         assert corpus == bands
+
+    def test_apply_leaves_no_persisted_rdds(self, spark, tmp_path):
+        """The sink owns every persist it makes: empty state, a batch on
+        existing state, a ledger replay and a marker recovery leave no
+        persisted RDD behind.  The check is on RDD ids, not the count:
+        Spark's context cleaner may free an unreachable RDD that an
+        earlier test persisted at any moment, which lowers the count."""
+        import os
+
+        jsc = spark.sparkContext._jsc
+        sink = NearDupIngestSink(str(tmp_path / "corpus"))
+
+        def apply(rows, batch_id):
+            before = set(jsc.getPersistentRDDs().keys())
+            sink.apply_batch(_df(spark, rows), batch_id)
+            assert set(jsc.getPersistentRDDs().keys()) <= before
+
+        apply([(1, BASE), (2, BASE), (3, NEAR), (10, OTHER)], 0)  # empty
+        apply([(21, NEAR), (30, THIRD)], 1)  # existing state
+        apply([(21, NEAR), (30, THIRD)], 1)  # ledger replay
+        os.remove(sink._ledger_path(1))
+        apply([(21, NEAR), (30, THIRD)], 1)  # marker recovery
+        assert sink.applied(1)
+        assert {r.doc_id for r in sink.read_corpus(spark).collect()} == {1, 10, 30}
+
+    def test_existing_gate_rejects_in_batch_min_id(self, spark, tmp_path):
+        """The existing-index gate rejects doc 21, the min id of the
+        in-batch near-dup pair (21, 22); doc 22 is not a near-dup of any
+        admitted doc, so it is admitted instead of losing to 21."""
+        toks = [f"w{i:02d}" for i in range(42)]
+        first = " ".join(toks)
+        near_first = toks[:-1] + ["omega"]
+        near_near = list(near_first)
+        near_near[0], near_near[20] = "zeta", "zetb"
+        near_first, near_near = " ".join(near_first), " ".join(near_near)
+
+        sink = NearDupIngestSink(str(tmp_path / "corpus"))
+        n, k, nb, t = sink.ngram, sink.k, sink.bands, sink.threshold
+        sh = {x: _ref_shingles(x, n) for x in (first, near_first, near_near)}
+        bd = {x: _ref_bands(sh[x], k, nb) for x in sh}
+        # preconditions: 21 ~ 1 and 21 ~ 22 collide and verify; 22 and 1
+        # collide but do not verify
+        assert bd[near_first] & bd[first] and _ref_near(sh[near_first], sh[first], t)
+        assert bd[near_near] & bd[near_first]
+        assert _ref_near(sh[near_near], sh[near_first], t)
+        assert not _ref_near(sh[near_near], sh[first], t)
+
+        batches = [[(1, first)], [(21, near_first), (22, near_near)]]
+        for i, rows in enumerate(batches):
+            sink.apply_batch(_df(spark, rows), i)
+        got = {r.doc_id for r in sink.read_corpus(spark).collect()}
+        assert got == {1, 22} == _ref_walk(sink, batches)[0]
+
+    def test_seeded_two_batches_match_python_walk(self, spark, tmp_path):
+        """Planted exact and near duplicates within and across two
+        batches: the admitted ids and every admitted doc's band rows
+        equal a plain-Python walk of the admission rules."""
+        batches = _seeded_batches(11)
+        sink = NearDupIngestSink(str(tmp_path / "corpus"))
+        want_ids, want_bands = _ref_walk(sink, batches)
+        # the plants exercise every gate: exact and near duplicates are
+        # rejected in both batches, and batch 1 loses docs to batch 0
+        all_ids = {d for b in batches for d, _x in b}
+        assert len(all_ids - want_ids) >= 8
+        assert {300, 301, 302} <= all_ids - want_ids
+        assert any(310 + i not in want_ids for i in range(4))
+
+        for i, rows in enumerate(batches):
+            sink.apply_batch(_df(spark, rows), i)
+        got_ids = {r.doc_id for r in sink.read_corpus(spark).collect()}
+        got_bands: dict = {}
+        for r in sink._table(spark, "bands").collect():
+            got_bands.setdefault(r.doc_id, set()).add((r.band_id, r.band_key))
+        assert got_ids == want_ids
+        assert got_bands == {d: b for d, b in want_bands.items() if b}
 
     def test_streaming_wiring_equals_direct(self, spark, tmp_path):
         from vcf_pg_loader_spark.streaming.events import read_events_stream

@@ -203,8 +203,9 @@ def test_ivf_assign_no_corpus_exchange_one_probe_window(spark, sf):
     (a) _ivf_assign (the per-Lloyd-round corpus assignment) must be a
     narrow map — ZERO hashpartitioning exchanges; its only exchange is
     the SinglePartition gather of the k-row centroid array.  (b) the
-    full q_ann_ivf keeps exactly ONE rank Window — the deliberately
-    kept probe-side ranking — not one per assignment round."""
+    full q_ann_ivf keeps exactly TWO rank Windows — the deliberately
+    kept probe-side rankings (the nprobe cell ranking and the final
+    top-k) — not one per assignment round."""
     from vcf_pg_loader_spark.operators.similarity import (
         _ivf_assign,
         _prep_vectors,

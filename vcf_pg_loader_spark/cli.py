@@ -1619,8 +1619,13 @@ def cmd_train_vocab(args) -> int:
         print("--encode-out needs --corpus (the documents to encode)",
               file=sys.stderr)
         return 2
-    spark = _spark()
     strategy = getattr(args, "strategy", "local")
+    if strategy == "sequential" and args.min_count > 1 and not counts_state:
+        print("--min-count has no effect with --strategy sequential "
+              "(bpe_learn applies no frequency floor); use local or "
+              "batched, or drop --min-count", file=sys.stderr)
+        return 2
+    spark = _spark()
     mode = getattr(args, "mode", "words") or "words"
     max_chars = getattr(args, "max_chars", None)
     seg_kw = {"mode": mode}
@@ -1719,12 +1724,15 @@ def cmd_train_vocab(args) -> int:
                     max_types=bound,
                     **seg_kw,
                 )
+        elif strategy == "batched":
+            merges = bpe_learn_batched(
+                docs,
+                n_merges=args.n_merges,
+                min_count=args.min_count,
+                **seg_kw,
+            )
         else:
-            trainer = {
-                "batched": bpe_learn_batched,
-                "sequential": bpe_learn,
-            }[strategy]
-            merges = trainer(docs, n_merges=args.n_merges, **seg_kw)
+            merges = bpe_learn(docs, n_merges=args.n_merges, **seg_kw)
         from vcf_pg_loader_spark.operators.bpe import word_counts
         from vcf_pg_loader_spark.operators.tokenids import (
             alphabet_from_counts,
@@ -2920,11 +2928,13 @@ def build_parser() -> argparse.ArgumentParser:
                          "state's corpus-epoch identity")
     sp.add_argument("--min-count", type=int, default=1,
                     help="word-frequency floor applied distributed-side "
-                         "BEFORE the trainer's vocabulary collect (local/"
-                         "counts-state strategies) — bounds driver memory "
-                         "on heavy singleton tails. The standard "
-                         "approximation, not exactly merge-preserving at "
-                         "ties; default 1 keeps training exact")
+                         "BEFORE the trainer's vocabulary collect (local, "
+                         "batched and counts-state strategies) — bounds "
+                         "driver memory on heavy singleton tails. The "
+                         "standard approximation, not exactly "
+                         "merge-preserving at ties; default 1 keeps "
+                         "training exact. The sequential strategy has no "
+                         "floor and rejects a value above 1")
     sp.add_argument("--out", required=True, help="merges JSON path")
     sp.add_argument("--n-merges", type=int, default=64)
     sp.add_argument("--strategy", default="auto",

@@ -400,18 +400,21 @@ def lsh_candidate_pairs(sig: DataFrame, k: int = 8, bands: int = 4) -> DataFrame
     banded = lsh_band_table(sig, k, bands).persist(
         StorageLevel.MEMORY_AND_DISK
     )
+    return band_pairs(banded).distinct()
+
+
+def band_pairs(banded: DataFrame) -> DataFrame:
+    """(d1, d2) with d1 < d2 for every two docs sharing a (band_id,
+    band_key) bucket of a :func:`lsh_band_table` frame.  Not distinct: a
+    pair sharing several bands comes out once per band."""
     a = banded.alias("a")
     b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    return a.join(
+        b,
+        (F.col("a.band_id") == F.col("b.band_id"))
+        & (F.col("a.band_key") == F.col("b.band_key"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
 
 
 def lsh_candidate_pairs_capped(
@@ -471,18 +474,7 @@ def lsh_candidate_pairs_capped(
         StorageLevel.MEMORY_AND_DISK
     )
     if bucket_cap is None:
-        a = banded.alias("a")
-        b = banded.alias("b")
-        pairs = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_key") == F.col("b.band_key"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-            .distinct()
-        )
+        pairs = band_pairs(banded).distinct()
         routed = banded.limit(0).select(
             "band_id", "band_key", F.lit(0).cast("bigint").alias("sz")
         )
@@ -528,16 +520,7 @@ def lsh_candidate_pairs_capped(
     else:
         # cap too large for O(cap²) per-row arrays: stream the pairs
         # through the self-join instead (identical output)
-        a = small.alias("a")
-        b = small.alias("b")
-        pairs_small = a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        ).select(
-            F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2")
-        )
+        pairs_small = band_pairs(small)
     big = sized.filter(F.col("_sz") > bucket_cap)
     # star: min pairs with every other member — d1 < d2 by construction
     pairs_big = big.filter(F.col("doc_id") != F.col("_bmin")).select(
@@ -854,20 +837,22 @@ def connected_components(
     # control-plane sized next to the corpus (LSH verification keeps
     # ~0.5-1% of docs even on collision-dense corpora), yet each
     # label-propagation round costs several fixed-overhead Spark stages
-    # — on a few-thousand-edge graph the distributed loop is ~90% jo b
+    # — on a few-thousand-edge graph the distributed loop is ~90% job
     # scheduling.  Below the bound, collect the (already persisted)
     # edge list and run path-compressed union-find on the driver — the
     # IDENTICAL min-label output (components labeled by their minimum
     # member; Python min and F.min agree on the numeric and string id
     # types used here), measured 7-8x faster at fixture scale.  The
     # bound caps driver memory at a few MB; bigger edge sets take the
-    # distributed loop unchanged.  The one count() materializes the
-    # persist the first round would have paid anyway.
-    n_edges = half.count()
+    # distributed loop unchanged.  One bounded collect both sizes the
+    # graph and fetches it: a graph past the bound costs at most
+    # SMALL_CC_EDGES + 1 rows of driver memory before the loop runs.
+    rows = half.limit(SMALL_CC_EDGES + 1).collect()
+    small = len(rows) <= SMALL_CC_EDGES
     if stats is not None:
-        stats["cc_edges"] = n_edges
+        stats["cc_edges"] = len(rows) if small else half.count()
         stats["cc_rounds"] = 0
-    if n_edges <= SMALL_CC_EDGES:
+    if small:
         from pyspark.sql.types import StructField, StructType
 
         parent: dict = {}
@@ -880,7 +865,6 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
-        rows = half.collect()
         half.unpersist()
         nodes = set()
         for d1, d2 in rows:
@@ -902,6 +886,7 @@ def connected_components(
                 [StructField("node", ty), StructField("comp", ty)]
             ),
         )
+    del rows  # past the bound the loop below reads `half`, not the sample
     und = (
         half.union(half.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()

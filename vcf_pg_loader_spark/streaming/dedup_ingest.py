@@ -88,106 +88,70 @@ class NearDupIngestSink(ParquetUpsertSink):
     def read(self, spark) -> DataFrame:  # the base reads target/ directly
         return self.read_corpus(spark)
 
-    # -- admission ------------------------------------------------------
-    def _admit(self, spark, batch: DataFrame) -> DataFrame:
-        """The subset of `batch` that survives all three gates, with its
-        doc_fp column attached."""
-        fp = fingerprint(batch.dropDuplicates(["doc_id"]))
+    # -- admission + exactly-once apply --------------------------------
+    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
+        """Admit the part of the batch that survives the three gates and
+        swap it, with its band rows, into the state.
 
-        # intra-batch exact: min doc_id per fingerprint
+        The batch's exact-gate survivors, their shingles and their LSH
+        band table are each built once.  The band table feeds the join
+        against the persisted index, the in-batch self-join and the band
+        write; the shingles feed both Jaccard verifications.  This method
+        persists them, the admitted set (it feeds the touched-bucket lookup
+        and both writes) and, on existing state, the ids the index gate
+        rejected, and frees every one before it returns."""
+        from pyspark.storagelevel import StorageLevel
+
+        spark = batch_df.sparkSession
+        level = StorageLevel.MEMORY_AND_DISK
+        corpus_old = self._table(spark, "corpus")
+        bands_old = self._table(spark, "bands")
+
+        # exact gate: min doc_id per fingerprint, minus admitted copies
+        fp = fingerprint(batch_df.dropDuplicates(["doc_id"]))
         canon = fp.groupBy("doc_fp").agg(F.min("doc_id").alias("doc_id"))
         fp = fp.join(canon, ["doc_fp", "doc_id"], "left_semi")
-
-        corpus_old = self._table(spark, "corpus")
         if corpus_old is not None:
             fp = fp.join(
                 corpus_old.select("doc_fp").distinct(), "doc_fp", "left_anti"
             )
-
-        from pyspark.storagelevel import StorageLevel
-
-        sh_new = D.shingles(fp, "doc_id", "text", self.ngram).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        bands_new = D.lsh_band_table(
-            D.minhash_signatures(sh_new, self.k), self.k, self.bands
-        )
-
-        # near-dup vs EXISTING: collide against the persisted index,
-        # verify only colliding (new, old) pairs with exact Jaccard
-        bands_old = self._table(spark, "bands")
-        if bands_old is not None and corpus_old is not None:
-            cand = (
-                bands_new.alias("n")
-                .join(
-                    bands_old.alias("o"),
-                    (F.col("n.band_id") == F.col("o.band_id"))
-                    & (F.col("n.band_key") == F.col("o.band_key")),
-                )
-                .select(
-                    F.col("o.doc_id").alias("d1"), F.col("n.doc_id").alias("d2")
-                )
-                .distinct()
-            )
-            # shingles for the colliding OLD docs only
-            old_hit = corpus_old.join(
-                cand.select(F.col("d1").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_semi",
-            )
-            sh_old = D.shingles(old_hit, "doc_id", "text", self.ngram)
-            dup = D.verify_candidate_jaccard(
-                cand, sh_old.unionByName(sh_new), self.threshold
-            )
-            fp = fp.join(
-                dup.select(F.col("d2").alias("doc_id")).distinct(),
-                "doc_id",
-                "left_anti",
-            )
-
-        # near-dup within the batch: LSH + CC, keep min-id per cluster
-        pairs = D.verify_candidate_jaccard(
-            D.lsh_candidate_pairs(
-                D.minhash_signatures(sh_new, self.k), self.k, self.bands
-            ),
-            sh_new,
-            self.threshold,
-        )
-        # restrict to pairs still alive after the gates above
-        alive = fp.select("doc_id")
-        pairs = (
-            pairs.join(
-                alive.withColumnRenamed("doc_id", "d1"), "d1", "left_semi"
-            ).join(alive.withColumnRenamed("doc_id", "d2"), "d2", "left_semi")
-        )
-        cc = D.connected_components(pairs.select("d1", "d2"), "d1", "d2")
-        admitted = D.keep_canonical(fp, cc, "doc_id")
-        sh_new.unpersist()
-        return admitted
-
-    # -- exactly-once apply --------------------------------------------
-    def _apply(self, batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from pyspark.storagelevel import StorageLevel
-
-        # the admitted set feeds the corpus write, the band build, and
-        # the touched-bucket lookup — run the admission gates once
-        admitted = self._admit(spark, batch_df).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+        owned = [fp.persist(level)]
         try:
-            add_bands = D.lsh_band_table(
-                D.minhash_signatures(
-                    D.shingles(admitted, "doc_id", "text", self.ngram),
-                    self.k,
-                ),
-                self.k,
-                self.bands,
+            sh = D.shingles(fp, "doc_id", "text", self.ngram).persist(level)
+            owned.append(sh)
+            bands = D.lsh_band_table(
+                D.minhash_signatures(sh, self.k), self.k, self.bands
+            ).persist(level)
+            owned.append(bands)
+
+            alive, alive_bands = fp, bands
+            if bands_old is not None and corpus_old is not None:
+                rejected = self._near_existing(
+                    corpus_old, bands_old, sh, bands
+                ).persist(level)
+                owned.append(rejected)
+                alive = fp.join(rejected, "doc_id", "left_anti")
+                # a pair touching a rejected doc must not merge clusters
+                alive_bands = bands.join(rejected, "doc_id", "left_anti")
+
+            # near-dup within the batch: band self-join + verify + CC,
+            # keep min-id per cluster
+            pairs = D.verify_candidate_jaccard(
+                D.band_pairs(alive_bands).distinct(), sh, self.threshold
             )
+            cc = D.connected_components(pairs.select("d1", "d2"), "d1", "d2")
+            # cc holds at most one row per batch doc: broadcasting it
+            # keeps the survivors' partitioning (no re-shuffle of `fp`)
+            admitted = D.keep_canonical(
+                alive, F.broadcast(cc), "doc_id"
+            ).persist(level)
+            owned.append(admitted)
+
             # insert-only sink: the touched partitions are exactly the
             # admitted ids' buckets; every other corpus/bands dir
             # hard-links through the swap
             touched = admitted.select("doc_id")
+            add_bands = bands.join(touched, "doc_id", "left_semi")
             new_corpus, c_prune = self._merge_id_bucketed(
                 self._table_raw(spark, "corpus"), admitted, touched, "doc_id"
             )
@@ -207,8 +171,42 @@ class NearDupIngestSink(ParquetUpsertSink):
                 prune=prune or None,
             )
         finally:
-            admitted.unpersist()
+            for df in owned:
+                df.unpersist()
         self._record(batch_id, n)
+
+    def _near_existing(
+        self,
+        corpus_old: DataFrame,
+        bands_old: DataFrame,
+        sh: DataFrame,
+        bands: DataFrame,
+    ) -> DataFrame:
+        """(doc_id) of batch docs that are near-dups of an admitted doc:
+        the batch's band rows collide with the persisted index, and only
+        the colliding (old, new) pairs fetch shingles for exact Jaccard
+        verification."""
+        cand = (
+            bands.alias("n")
+            .join(
+                bands_old.alias("o"),
+                (F.col("n.band_id") == F.col("o.band_id"))
+                & (F.col("n.band_key") == F.col("o.band_key")),
+            )
+            .select(F.col("o.doc_id").alias("d1"), F.col("n.doc_id").alias("d2"))
+            .distinct()
+        )
+        # shingles for the colliding OLD docs only
+        old_hit = corpus_old.join(
+            cand.select(F.col("d1").alias("doc_id")).distinct(),
+            "doc_id",
+            "left_semi",
+        )
+        sh_old = D.shingles(old_hit, "doc_id", "text", self.ngram)
+        dup = D.verify_candidate_jaccard(
+            cand, sh_old.unionByName(sh), self.threshold
+        )
+        return dup.select(F.col("d2").alias("doc_id")).distinct()
 
 
 class BM25IndexSink(ParquetUpsertSink):
